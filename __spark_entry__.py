@@ -1926,8 +1926,8 @@ FROM orders GROUP BY ROLLUP (o_orderstatus, o_orderpriority)
 """
 
 # classic-Pig RANK (beyond the reference grammar): global total-order
-# rank with ties, computed scale-correctly (range repartition +
-# per-partition rank + broadcast offsets — executor.op_rank)
+# rank with ties, computed scale-correctly by datapipe.util.global_rank
+# (executor.op_rank)
 RANK_Q = """
 P = LOAD '$sf/part.parquet' USING ParquetStorage();
 R = RANK P BY p_size ASC, p_brand DESC;
@@ -2199,9 +2199,8 @@ WHERE pos <= greatest(m - 4, 0)
 def q_seq_pack(spark, sf_dir):
     """Concat-and-chunk sequence packing (GPT-style pretraining
     assembly; datapipe/pack.py chunk_pack): global token prefix sum
-    via the TeraSort two-phase pattern (range partition + broadcast
-    per-partition totals — never a single-partition window), then each
-    document's span mapped to fixed 64-token training-sequence ids."""
+    from datapipe.util.global_rank, then each document's span mapped
+    to fixed 64-token training-sequence ids."""
     return dp_pack.chunk_pack(_docs(spark, sf_dir), seq_len=64)
 
 
@@ -2230,7 +2229,7 @@ FROM cum
 def q_global_shuffle(spark, sf_dir):
     """Deterministic global shuffle (datapipe/pack.py global_shuffle):
     every document stamped with its reproducible pseudo-random global
-    read position — md5-keyed TeraSort two-phase rank on a narrow
+    read position — md5-keyed datapipe.util.global_rank on a narrow
     (id, key) projection, joined back to the full rows. Same seed →
     same permutation at any cluster size; the oracle is the plain
     ROW_NUMBER over the same md5 key."""
@@ -2251,7 +2250,7 @@ def q_take_top_frac(spark, sf_dir):
     """Rank-based quality gate (datapipe/pack.py take_top_frac): keep
     exactly ceil(0.6·n) documents with the largest n_chars (round-6
     score, id tie-break) — the calibration-free form of 'keep the top
-    60% by quality'. TeraSort two-phase rank on a narrow (id, score)
+    60% by quality'. datapipe.util.global_rank on a narrow (id, score)
     projection; the oracle is the plain ROW_NUMBER form."""
     return dp_pack.take_top_frac(
         _docs(spark, sf_dir).select("doc_id", "source", "n_chars"),
@@ -2455,11 +2454,12 @@ QUALIFY row_number() OVER (PARTITION BY source ORDER BY doc_id) <= 10
 def q_dsir_resample(spark, sf_dir):
     """DSIR Gumbel-top-k resampling (Xie et al. 2023; datapipe/pack.py
     dsir_resample): deterministic per-id Gumbel noise added to the
-    log-weight, top ceil(frac·n) kept via the TeraSort two-phase rank
-    (range partition + per-partition row_number + broadcast offsets —
-    never a single-partition global window). sel_key rounds to 6
-    decimals before ranking so engine ulp differences in ln() can't
-    flip the selected set."""
+    log-weight, top ceil(frac·n) kept by datapipe.util.global_rank.
+    At sf0.1 the few thousand keyed rows are under its
+    RANK_SMALL_ROWS gate, so one window ranks them; only inputs above
+    the gate take the two-phase range-partition rank. sel_key rounds
+    to 6 decimals before ranking so engine ulp differences in ln()
+    can't flip the selected set."""
     docs = _docs(spark, sf_dir)
     return dp_pack.dsir_resample(
         docs.filter(F.col("source") != "src0"),
@@ -3737,8 +3737,8 @@ def q_token_budget_sample(spark, sf_dir):
     seeded md5-hash order while the source's running token total
     (exclusive) is under 1500 — the crossing doc included. Quotas in
     tokens, not documents (the pre-training mixture contract);
-    TeraSort two-phase per-group cumsum, no single-reducer group
-    window."""
+    per-group cumsum from datapipe.util.global_rank, no
+    single-reducer group window at scale."""
     return (dp_pack.token_budget_sample(
         _docs(spark, sf_dir), 1500, group_col="source",
         text_col="text", id_col="doc_id", seed=42)

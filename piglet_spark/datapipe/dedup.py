@@ -1226,7 +1226,9 @@ def _bloom_build(bench_df: DataFrame, text_col: str, k: int,
         np.bitwise_or.at(bm, arr // 8,
                          (1 << (arr % 8)).astype(np.uint8))
         bitmap = bytearray(bm.tobytes())
-    except Exception:  # no pyarrow/numpy → row path, same values
+    except (ImportError, AttributeError):
+        # no pyarrow/numpy, or a PySpark without toArrow → row
+        # path, same values; a failing job raises, never reruns
         bitmap = bytearray(m_bits // 8)
         for r in pos_df.collect():
             p = r["_p"]

@@ -1694,55 +1694,26 @@ class Executor:
         """RANK (classic Pig; not in the reference grammar): prepend
         ``rank_<rel>``.
 
-        BY form: range-repartition on the sort key (equal keys
-        colocate under RangePartitioner, so per-partition rank() /
-        dense_rank() is globally correct), then add broadcast
-        cumulative offsets (rows before partition; distinct keys
-        before partition for DENSE) — a global total order with no
-        single-partition window. No-BY form: 1-based input-order row
-        number via the ``_with_index`` offsets machinery."""
-        from pyspark.sql.window import Window
+        BY form: SQL RANK / DENSE_RANK over the key order from
+        :func:`~..datapipe.util.global_rank` — a global total order
+        with no single-partition window at scale. No-BY form: 1-based
+        input-order row number via ``_with_index``."""
         df = self.df(op.rel)
         rank_name = f"rank_{op.rel}"
         if not op.specs:
             out = self._with_index(df).withColumn(
-                rank_name, (F.col("index") + 1).cast("long"))
+                rank_name, F.col("index") + 1)
             self.env[op.out] = out.select(rank_name, *df.columns)
             return
+        from ..datapipe.util import global_rank
         ctx = self.ctx(df)
         keys = [compile_expr(sp.field, ctx) for sp in op.specs]
         order = [k.asc() if sp.asc else k.desc()
                  for k, sp in zip(keys, op.specs)]
-        nparts = int(df.sparkSession.conf.get(
-            "spark.sql.shuffle.partitions"))
-        # localCheckpoint pins the range partitioning: the stats branch
-        # and the window branch below consume it as separate subplans,
-        # and AQE may coalesce the two copies of the exchange
-        # differently — spark_partition_id would then disagree between
-        # offset computation and ranking (observed at sf0.1). A global
-        # total order needs this materialization barrier anyway
-        # (sample → range-partition → count → offset, the TeraSort
-        # pattern).
-        # pin a wide upstream first: repartitionByRange's range-bounds
-        # sampling job would execute it a second time (datapipe.util
-        # .pin_if_wide; measured on dsir_resample, SCALE.md r05)
-        from ..datapipe.util import pin_if_wide
-        base = (pin_if_wide(df).repartitionByRange(nparts, *order)
-                .withColumn("__pid", F.spark_partition_id())
-                .localCheckpoint())
-        aggs = [F.count(F.lit(1)).alias("__cnt")]
-        if op.dense:
-            # struct() so an all-NULL key still counts as one group
-            aggs.append(F.count_distinct(F.struct(*keys)).alias("__dcnt"))
-        stats = base.groupBy("__pid").agg(*aggs)
-        offsets = self._cum_offsets(stats,
-                                    "__dcnt" if op.dense else "__cnt")
-        w = Window.partitionBy("__pid").orderBy(*order)
-        ranker = F.dense_rank() if op.dense else F.rank()
-        ranked = (base.join(F.broadcast(offsets), on="__pid")
-                  .withColumn(rank_name, (ranker.over(w)
-                                          + F.col("__off")).cast("long")))
-        self.env[op.out] = ranked.select(rank_name, *df.columns)
+        ranked, _ = global_rank(df, order,
+                                ties="dense" if op.dense else "rank")
+        self.env[op.out] = ranked.select(
+            (F.col("__rk") + 1).alias(rank_name), *df.columns)
 
     def op_sample(self, op: A.Sample) -> None:
         df = self.df(op.rel)
@@ -1799,16 +1770,6 @@ class Executor:
 
     # -------------------------------------------------------------- zip
 
-    @staticmethod
-    def _cum_offsets(stats: DataFrame, count_col: str) -> DataFrame:
-        """Per-partition stats → (__pid, __off): cumulative count of
-        earlier partitions, computed driver-side from the collected
-        stats rows (≤ numPartitions — never the data) via the shared
-        TeraSort phase-2 helper. Callers pass stats over a pinned
-        base, so the eager collect doesn't recompute upstream."""
-        from ..datapipe.util import cum_offsets
-        return cum_offsets(stats, count_col)[0]
-
     def _with_index(self, df: DataFrame) -> DataFrame:
         """Distributed 0-based dense index (no single-partition sort):
         monotonically_increasing_id encodes (partition, row#); add
@@ -1816,7 +1777,7 @@ class Executor:
         pinned (pin_if_wide) so the offsets collect and the main job
         see identical partitioning — mid values must agree between
         the two passes."""
-        from ..datapipe.util import pin_if_wide
+        from ..datapipe.util import cum_offsets, pin_if_wide
         mid = F.monotonically_increasing_id()
         df = pin_if_wide(df).withColumn("__mid", mid)
         # exact bit arithmetic — double division loses precision past
@@ -1825,7 +1786,7 @@ class Executor:
         row_in_part = F.col("__mid").bitwiseAND(F.lit((1 << 33) - 1))
         df = df.withColumn("__pid", pid).withColumn("__row", row_in_part)
         counts = df.groupBy("__pid").agg(F.count(F.lit(1)).alias("__cnt"))
-        offsets = self._cum_offsets(counts, "__cnt")
+        offsets, _ = cum_offsets(counts)
         out = df.join(F.broadcast(offsets), on="__pid", how="inner")
         out = out.withColumn("index", (F.col("__off") + F.col("__row"))
                              .cast("long"))

@@ -257,21 +257,6 @@ def test_dsir_resample_gumbel_matches_bruteforce(corpus):
         assert kept[i]["sel_key"] == pytest.approx(keys[i], abs=2e-6)
 
 
-def test_dsir_resample_regimes_agree(corpus):
-    """r10: the small-input TakeOrdered path (default gate) and the
-    TeraSort two-phase rank (small_rows=0 forces it) select the
-    identical set with identical keys."""
-    from pyspark.sql import functions as F
-    raw = corpus.filter(F.col("source") != "src0")
-    tgt = corpus.filter(F.col("source") == "src0")
-    small = sorted(tuple(r) for r in pack.dsir_resample(
-        raw, tgt, n_buckets=64, frac=0.3, seed=9).collect())
-    tera = sorted(tuple(r) for r in pack.dsir_resample(
-        raw, tgt, n_buckets=64, frac=0.3, seed=9,
-        small_rows=0).collect())
-    assert small == tera and len(small) > 0
-
-
 def test_dsir_resample_topk_prefers_target_like(corpus, spark):
     tgt = spark.createDataFrame(
         [(100, "machine learning models train on tokens")],
@@ -422,18 +407,6 @@ def test_take_top_frac_matches_bruteforce(corpus):
     assert set(out.columns) == {"doc_id", "text", "source", "score"}
 
 
-def test_take_top_frac_regimes_agree(corpus):
-    """r10: the small-input TakeOrdered path and the TeraSort rank
-    (small_rows=0) keep the identical set, both directions."""
-    df = corpus.withColumn("score", pack.F.length("text"))
-    for asc in (False, True):
-        small = sorted(r["doc_id"] for r in pack.take_top_frac(
-            df, "score", 0.3, ascending=asc).collect())
-        tera = sorted(r["doc_id"] for r in pack.take_top_frac(
-            df, "score", 0.3, ascending=asc, small_rows=0).collect())
-        assert small == tera and len(small) > 0
-
-
 def test_take_top_frac_ascending_and_nulls(spark):
     """ascending=True keeps the SMALLEST scores; null scores rank
     worst in both directions (never crowd out scored rows)."""
@@ -540,27 +513,65 @@ S = STREAM D THROUGH split_assign('train:0.8,val:0.2', 7);
     assert got == direct
 
 
-def test_pack_small_window_regimes_agree(corpus):
-    """r11: the small-input single-window regimes (default gate) and
-    the TeraSort two-phase plans (small_rows=0 forces them) produce
-    identical rows for chunk_pack, global_shuffle and
-    token_budget_sample."""
-    small = sorted(tuple(r) for r in
-                   pack.chunk_pack(corpus, seq_len=8).collect())
-    tera = sorted(tuple(r) for r in
-                  pack.chunk_pack(corpus, seq_len=8,
-                                  small_rows=0).collect())
-    assert small == tera and len(small) > 0
+# ------------------------------------------- global_rank regimes
 
-    s2 = sorted(tuple(r) for r in
-                pack.global_shuffle(corpus, seed=5).collect())
-    t2 = sorted(tuple(r) for r in
-                pack.global_shuffle(corpus, seed=5,
-                                    small_rows=0).collect())
-    assert s2 == t2 and len(s2) > 0
+def _scored(corpus):
+    """corpus + a score with ties and NULLs (every 5th doc unscored)."""
+    F = pack.F
+    return corpus.withColumn(
+        "score", F.when(F.col("doc_id") % 5 == 0, F.lit(None))
+        .otherwise(F.length("text")))
 
-    s3 = sorted(tuple(r) for r in pack.token_budget_sample(
-        corpus, 20, seed=5).collect())
-    t3 = sorted(tuple(r) for r in pack.token_budget_sample(
-        corpus, 20, seed=5, small_rows=0).collect())
-    assert s3 == t3 and len(s3) > 0
+
+def _dsir(corpus):
+    F = pack.F
+    return pack.dsir_resample(corpus.filter(F.col("source") != "src0"),
+                              corpus.filter(F.col("source") == "src0"),
+                              n_buckets=64, frac=0.3, seed=9)
+
+
+def _pig_rank(by):
+    def run(corpus, tmp_path):
+        from piglet_spark.engine import PigEngine
+        p = str(tmp_path / "rank_docs")
+        # key = doc_id % 3 → three ties of 17 rows, each more than a
+        # range partition's share of the 51 rows
+        corpus.withColumn("k", pack.F.col("doc_id") % 3) \
+            .write.mode("overwrite").parquet(p)
+        eng = PigEngine(corpus.sparkSession)
+        eng.run(f"""
+D = LOAD '{p}' USING ParquetStorage();
+R = RANK D BY {by};
+""")
+        return eng.df("R")
+    return run
+
+
+REGIME_CASES = {
+    "chunk_pack": lambda c, _: pack.chunk_pack(c, seq_len=8),
+    "global_shuffle": lambda c, _: pack.global_shuffle(c, seed=5),
+    "take_top_frac_desc": lambda c, _: pack.take_top_frac(
+        _scored(c), "score", 0.3),
+    "take_top_frac_asc": lambda c, _: pack.take_top_frac(
+        _scored(c), "score", 0.3, ascending=True),
+    "dsir_resample": lambda c, _: _dsir(c),
+    "token_budget_sample": lambda c, _: pack.token_budget_sample(
+        c, 20, seed=5),
+    "rank_by": _pig_rank("k DESC"),
+    "rank_by_dense": _pig_rank("k ASC DENSE"),
+}
+
+
+@pytest.mark.parametrize("case", sorted(REGIME_CASES))
+def test_global_rank_regimes_agree(case, corpus, tmp_path, monkeypatch):
+    """The single-window regime (default gate at this size) and the
+    two-phase range-partition rank (forced by a zero gate) give equal
+    rows and an equal schema for every global_rank caller."""
+    from piglet_spark.datapipe import util
+    small = REGIME_CASES[case](corpus, tmp_path)
+    want = sorted(tuple(r) for r in small.collect())
+    monkeypatch.setattr(util, "RANK_SMALL_ROWS", 0)
+    large = REGIME_CASES[case](corpus, tmp_path)
+    assert sorted(tuple(r) for r in large.collect()) == want
+    assert large.schema == small.schema
+    assert len(want) > 0
